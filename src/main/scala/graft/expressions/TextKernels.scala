@@ -2,7 +2,9 @@ package graft.expressions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions.{coefA, coefB, P}
@@ -17,6 +19,18 @@ import graft.functions.TextFunctions.{coefA, coefB, P}
  * Semantics contract: every kernel is bit-equivalent to its Column-level
  * reference implementation in [[graft.functions.TextFunctions]] (asserted by
  * FastKernelSpec), which in turn mirrors the DuckDB oracle SQL.
+ *
+ * Character k-grams ([[sortedShingles]], [[coverageCounts]],
+ * [[hashedShingles]], [[winnowDigest]]) come from ONE linear walk of the
+ * UTF-8 bytes ([[Grams]]): `numBytesForFirstByte` steps from character to
+ * character and records where each one starts, so gram `i` is the byte
+ * range `[st(i), st(min(i + k, n)))` of the input's own buffer. Taking
+ * each gram with `substringSQL(i, k)` instead re-counts characters from
+ * the start of the string and copies the gram, O(n²) per document.
+ * Grams are hashed in place or wrapped as zero-copy `UTF8String.fromAddress`
+ * views. A view aliases the caller's row buffer, which Spark reuses for
+ * the next row, so no view may escape the call: a kernel that returns
+ * strings copies them first.
  */
 object TextKernels {
 
@@ -38,19 +52,45 @@ object TextKernels {
     * every consumer — MinHash, SimHash, Jaccard, frequency ordering — is
     * order-insensitive, and sorted output lets jaccardSorted merge. */
   def sortedShingles(s: UTF8String, k: Int): ArrayData = {
-    val n = s.numChars()
-    val m = math.max(n - k + 1, 1)
+    val g = new Grams(s, k)
     val set = new java.util.TreeSet[UTF8String]()
-    var i = 1
-    while (i <= m) {
-      set.add(s.substringSQL(i, k))
-      i += 1
-    }
+    var i = 0
+    while (i < g.count) { set.add(g.view(i)); i += 1 }
     val out = new Array[AnyRef](set.size)
     var j = 0
     val it = set.iterator()
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
+    while (it.hasNext) { out(j) = it.next().copy(); j += 1 }
     new GenericArrayData(out)
+  }
+
+  /** The character k-grams of `s` as byte ranges of its buffer, from one
+    * walk of its UTF-8 bytes. `st(c)` is the byte offset where character
+    * `c` starts, and `st(n)` is `numBytes`, so a truncated trailing
+    * character (malformed input) cannot reach past the string. Gram `i`
+    * is the range `substringSQL(i + 1, k)` copies, for the same
+    * `max(n - k + 1, 1)` positions: with `n < k` the one gram is the whole
+    * string (empty for the empty string), and `k <= 0` gives empty grams. */
+  private final class Grams(s: UTF8String, k: Int) {
+    val base: AnyRef = s.getBaseObject
+    val offset: Long = s.getBaseOffset
+    private val n = s.numChars()
+    private val st = {
+      val a = new Array[Int](n + 1)
+      var b = 0
+      var c = 0
+      while (c < n) {
+        a(c) = b
+        b += UTF8String.numBytesForFirstByte(Platform.getByte(base, offset + b))
+        c += 1
+      }
+      a(n) = s.numBytes()
+      a
+    }
+    private val span = math.max(k, 0)
+    val count: Int = math.max(n - k + 1, 1)
+    def start(i: Int): Int = st(math.min(i, n))
+    def length(i: Int): Int = st(math.min(i + span, n)) - start(i)
+    def view(i: Int): UTF8String = UTF8String.fromAddress(base, offset + start(i), length(i))
   }
 
   /** xhash32 of every element, deduplicated (mirrors
@@ -79,15 +119,14 @@ object TextKernels {
     * no hashing shortcut — but runs without the TreeSet sort, the output
     * array materialization, or the second intersect pass. */
   def coverageCounts(s: UTF8String, k: Int, ref: java.util.HashSet[UTF8String]): ArrayData = {
-    val n = s.numChars()
-    val m = math.max(n - k + 1, 1)
+    val g = new Grams(s, k)
     // Clamp BEFORE doubling: m * 2 overflows int for ~1 GiB documents.
-    val seen = new java.util.HashSet[UTF8String](math.min(m, 1 << 15) * 2)
+    val seen = new java.util.HashSet[UTF8String](math.min(g.count, 1 << 15) * 2)
     var hits = 0L
-    var i = 1
-    while (i <= m) {
-      val g = s.substringSQL(i, k)
-      if (seen.add(g) && ref.contains(g)) hits += 1
+    var i = 0
+    while (i < g.count) {
+      val v = g.view(i)
+      if (seen.add(v) && ref.contains(v)) hits += 1
       i += 1
     }
     ArrayData.toArrayData(Array(seen.size.toLong, hits))
@@ -209,22 +248,14 @@ object TextKernels {
     * (probability ~|sh|²/2^64 ≈ 1e-14, and FastKernelSpec asserts the
     * corpus-wide equality with string-set Jaccard). */
   def hashedShingles(s: UTF8String, k: Int): ArrayData = {
-    val n = s.numChars()
-    val m = math.max(n - k + 1, 1)
-    val set = new java.util.TreeSet[UTF8String]()
-    var i = 1
-    while (i <= m) {
-      set.add(s.substringSQL(i, k))
+    val g = new Grams(s, k)
+    // Hashing every gram and deduplicating the hashes gives the same set
+    // as hashing the distinct grams.
+    val hs = new Array[Long](g.count)
+    var i = 0
+    while (i < g.count) {
+      hs(i) = XXH64.hashUnsafeBytes(g.base, g.offset + g.start(i), g.length(i), 42L)
       i += 1
-    }
-    val hs = new Array[Long](set.size)
-    var j = 0
-    val it = set.iterator()
-    while (it.hasNext) {
-      val u = it.next()
-      hs(j) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-      j += 1
     }
     java.util.Arrays.sort(hs)
     var uniq = 0
@@ -236,7 +267,6 @@ object TextKernels {
     ArrayData.toArrayData(java.util.Arrays.copyOf(hs, uniq))
   }
 
-  /** Jaccard of two SORTED distinct long arrays by linear merge. */
   /** Binary-search membership in a sorted long array — O(log n) where
     * `array_contains` is O(n). The win that matters: an O(n)-per-probe
     * membership inside a per-row filter over the same row's n-element
@@ -278,7 +308,7 @@ object TextKernels {
       var ok = true
       var s = 0
       while (ok && s < seedHashes.length) {
-        val p = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(v, seedHashes(s)) & mask
+        val p = XXH64.hashLong(v, seedHashes(s)) & mask
         ok = ((bits((p >>> 6).toInt) >>> (p & 63L).toInt) & 1L) == 1L
         s += 1
       }
@@ -288,6 +318,7 @@ object TextKernels {
     ArrayData.toArrayData(java.util.Arrays.copyOf(out, m))
   }
 
+  /** Jaccard of two SORTED distinct long arrays by linear merge. */
   def jaccardSortedLong(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
     val nb = b.numElements()
@@ -423,11 +454,11 @@ object TextKernels {
     * (fewer than w gram positions) collapse to the single truncated
     * window, exactly like `slice` past the array end. */
   def winnowDigest(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val n = s.numChars()
-    val m = math.max(n - k + 1, 1)
+    val g = new Grams(s, k)
+    val m = g.count
     val hs = new Array[Long](m)
-    var i = 1
-    while (i <= m) { hs(i - 1) = xhash32(s.substringSQL(i, k)); i += 1 }
+    var i = 0
+    while (i < m) { hs(i) = xhash32(g.view(i)); i += 1 }
     val deque = new Array[Int](m)
     var head = 0
     var tail = 0

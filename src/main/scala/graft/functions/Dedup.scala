@@ -651,7 +651,13 @@ object Dedup {
     * driver actions per round — on a latency-loaded cluster the
     * round-trips, not the data, dominated.
     */
-  def duplicateClusters(pairs: DataFrame): DataFrame = {
+  def duplicateClusters(pairs: DataFrame): DataFrame = duplicateClustersOwned(pairs)._1
+
+  /** [[duplicateClusters]] with the persist-owner contract: returns the
+    * cluster frame plus [[CacheHandles]] over both contraction levels'
+    * persisted per-node frames, for the caller to release after its
+    * consuming action. */
+  def duplicateClustersOwned(pairs: DataFrame): (DataFrame, CacheHandles) = {
     val tup = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val edges = pairs
       .select(col("i").cast(LongType), col("j").cast(LongType))
@@ -685,11 +691,13 @@ object Dedup {
     val labelRoot = r2
       .join(broadcast(roots), r2("minl") === roots("lbl"), "left")
       .select(col("node").as("l"), coalesce(col("root"), col("minl")).as("rt"))
-    r1
+    val clusters = r1
       .join(labelRoot, r1("minl") === labelRoot("l"), "left")
       .select(
         col("node").as("id"),
         coalesce(col("rt"), col("minl")).as("cluster_id"))
+    // Dependent first: level 2's cached plan reads level 1's cache.
+    (clusters, CacheHandles(Seq(r2, r1)))
   }
 
   /** INCREMENTAL connected components — the daily-increment face of
@@ -782,11 +790,12 @@ object Dedup {
 
   /** One union-find contraction level (phases 1-2 of [[duplicateClusters]]):
     * partition-local components, then a per-node merge. Returns
-    * `(resolved, boundary)`: `resolved(node, minl)` gives each node its
-    * minimum label across partitions; `boundary` holds the label-graph
-    * edges `(label, minLabel)` produced by nodes seen in more than one
-    * partition — O(cut nodes), empty when no component crosses a
-    * partition. */
+    * `(byNode, boundary)`: `byNode(node, minl, ls)` gives each node its
+    * minimum label across partitions and is PERSISTED, owned by the
+    * caller (see [[duplicateClustersOwned]]); `boundary` holds the
+    * label-graph edges `(label, minLabel)` produced by nodes seen in
+    * more than one partition — O(cut nodes), empty when no component
+    * crosses a partition. */
   private[graft] def contractOnce(
       edges: org.apache.spark.sql.Dataset[(Long, Long)])
       : (DataFrame, org.apache.spark.sql.Dataset[(Long, Long)]) = {
@@ -807,13 +816,12 @@ object Dedup {
     val byNode = local.groupBy(col("node"))
       .agg(min(col("lbl")).as("minl"), collect_set(col("lbl")).as("ls"))
       .persist()
-    val resolved = byNode.select(col("node"), col("minl"))
     val boundary = byNode
       .select(col("minl"), explode(col("ls")).as("l"))
       .filter(col("l") =!= col("minl"))
       .select(col("l"), col("minl"))
       .as[(Long, Long)](tup)
-    (resolved, boundary)
+    (byNode, boundary)
   }
 
   /** Keep one document per duplicate cluster: drops every row of `df` whose

@@ -53,4 +53,24 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(cacheEntryCount === 0,
       s"release() left $cacheEntryCount cache entries behind")
   }
+
+  test("duplicateClustersOwned: flat entry count across repeated calls; release() empties the cache") {
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 4L), (20L, 21L)).toDF("i", "j")
+    var afterFirst = -1
+    var lastHandles: Dedup.CacheHandles = null
+    for (i <- 1 to 3) {
+      val (clusters, handles) = Dedup.duplicateClustersOwned(pairs)
+      assert(clusters.as[(Long, Long)].collect().toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+      if (i == 1) afterFirst = cacheEntryCount
+      assert(cacheEntryCount === afterFirst,
+        s"call $i grew the cache: $cacheEntryCount entries vs $afterFirst after the first")
+      lastHandles = handles
+    }
+    assert(afterFirst === 2, "expected one persisted per-node frame per contraction level")
+    lastHandles.release()
+    assert(cacheEntryCount === 0, s"release() left $cacheEntryCount cache entries behind")
+  }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import graft.expressions.TextKernels
 import graft.functions.{FastText, TextFunctions => TF}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -385,6 +389,110 @@ class FastKernelSpec extends AnyFunSuite with SparkSpec {
       val (n, bits) = (ta(0), ta(1))
       val fl = 63L - java.lang.Long.numberOfLeadingZeros(n)
       assert(bits >= 0 && bits <= n * fl, s"bits $bits outside [0, ${n * fl}]")
+    }
+  }
+
+  // The per-gram `substringSQL` forms of the four gram kernels, kept as
+  // references for the byte-offset walk that replaced them: gram i is
+  // `substringSQL(i, k)`, counted from the start of the string and copied.
+
+  private def sortedShinglesRef(s: UTF8String, k: Int): ArrayData = {
+    val m = math.max(s.numChars() - k + 1, 1)
+    val set = new java.util.TreeSet[UTF8String]()
+    for (i <- 1 to m) set.add(s.substringSQL(i, k))
+    new GenericArrayData(set.toArray)
+  }
+
+  private def coverageCountsRef(
+      s: UTF8String, k: Int, ref: java.util.HashSet[UTF8String]): ArrayData = {
+    val m = math.max(s.numChars() - k + 1, 1)
+    val seen = new java.util.HashSet[UTF8String]()
+    var hits = 0L
+    for (i <- 1 to m) {
+      val g = s.substringSQL(i, k)
+      if (seen.add(g) && ref.contains(g)) hits += 1
+    }
+    ArrayData.toArrayData(Array(seen.size.toLong, hits))
+  }
+
+  private def hashedShinglesRef(s: UTF8String, k: Int): ArrayData = {
+    val m = math.max(s.numChars() - k + 1, 1)
+    val set = new java.util.TreeSet[UTF8String]()
+    for (i <- 1 to m) set.add(s.substringSQL(i, k))
+    val hs = set.toArray(Array.empty[UTF8String]).map(u =>
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)).sorted.distinct
+    ArrayData.toArrayData(hs)
+  }
+
+  private def winnowDigestRef(s: UTF8String, k: Int, w: Int): ArrayData = {
+    val m = math.max(s.numChars() - k + 1, 1)
+    val hs = (1 to m).map(i => TextKernels.xhash32(s.substringSQL(i, k))).toArray
+    val deque = new Array[Int](m)
+    var head = 0
+    var tail = 0
+    val seen = new java.util.HashSet[java.lang.Long]()
+    var xor = 0L
+    for (j <- 0 until m) {
+      while (tail > head && hs(deque(tail - 1)) >= hs(j)) tail -= 1
+      deque(tail) = j
+      tail += 1
+      while (deque(head) <= j - w) head += 1
+      if (j >= w - 1 || (j == m - 1 && m < w)) {
+        val mn = hs(deque(head))
+        if (seen.add(mn)) xor ^= mn
+      }
+    }
+    ArrayData.toArrayData(Array(seen.size.toLong, xor))
+  }
+
+  /** String arrays compared by their UTF-8 bytes; long arrays by value. */
+  private def strings(a: ArrayData): Seq[Seq[Byte]] =
+    a.toObjectArray(StringType).toSeq.map(_.asInstanceOf[UTF8String].getBytes.toSeq)
+  private def longs(a: ArrayData): Seq[Long] = a.toLongArray().toSeq
+
+  /** The parity inputs for gram size `k`: the empty string, one character,
+    * n = k-1, k and k+1 in ASCII and in mixed 1- to 4-byte text (with a
+    * 4-byte character at the first and the last window position), and a
+    * 12,000-character document in each. */
+  private def gramInputs(k: Int): Seq[String] = {
+    val rnd = new scala.util.Random(k)
+    val mixed = Seq("a", "b", " ", "\u00e9", "\u00f1", "\u8a9e", "\u30c6", "\ud83d\ude80", "\ud834\udd1e")
+    def text(n: Int, alphabet: Seq[String]) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val rocket = "\ud83d\ude80"
+    val shortLens = Seq(k - 1, k, k + 1).filter(_ >= 0)
+    Seq("", "x", "\u8a9e", rocket) ++
+      shortLens.map(n => text(n, Seq("a", "b", "c"))) ++
+      shortLens.map(n => text(n, mixed)) ++
+      Seq(rocket + text(k - 1, mixed) + rocket, rocket * (k + 1),
+        text(12000, Seq("a", "b", "c", " ")), text(12000, mixed))
+  }
+
+  test("gram kernels == their substringSQL references, bit for bit (k = 1, 4, 16)") {
+    for (k <- Seq(1, 4, 16); text <- gramInputs(k)) {
+      val s = UTF8String.fromString(text)
+      val what = s"k=$k chars=${s.numChars()} text='${text.take(20)}'"
+      assert(strings(TextKernels.sortedShingles(s, k)) === strings(sortedShinglesRef(s, k)), what)
+      assert(longs(TextKernels.hashedShingles(s, k)) === longs(hashedShinglesRef(s, k)), what)
+      // Reference set: every other gram of the text itself, plus one absent gram.
+      val ref = new java.util.HashSet[UTF8String]()
+      val grams = sortedShinglesRef(s, k).toObjectArray(StringType)
+      grams.indices.filter(_ % 2 == 0).foreach(i => ref.add(grams(i).asInstanceOf[UTF8String]))
+      ref.add(UTF8String.fromString("\u0000absent"))
+      assert(longs(TextKernels.coverageCounts(s, k, ref)) === longs(coverageCountsRef(s, k, ref)), what)
+      for (w <- Seq(1, 4))
+        assert(longs(TextKernels.winnowDigest(s, k, w)) === longs(winnowDigestRef(s, k, w)),
+          s"$what w=$w")
+    }
+  }
+
+  test("sortedShingles output does not alias the input buffer") {
+    for (text <- Seq("the quick \u8a9e\u8a00 fox \ud83d\ude80 jumps", "ab\u00e9")) {
+      val bytes = text.getBytes("UTF-8")
+      val out = TextKernels.sortedShingles(UTF8String.fromBytes(bytes), 4)
+      val before = strings(out)
+      java.util.Arrays.fill(bytes, 'x'.toByte)
+      assert(strings(out) === before, s"text='$text'")
     }
   }
 }

@@ -43,4 +43,26 @@ class JsonLinesSpec extends AnyFunSuite with SparkSpec {
       assert(first("k").dataType === IntegerType)
     }
   }
+
+  test("inference samples every file: a field present only in a later, small file is kept") {
+    // Seven files of 1,100 lines each fill a 1,024-line sample by
+    // themselves; `extra` occurs only in the eighth and smallest file,
+    // which the size-ordered scan places in its last split.
+    val dir = java.nio.file.Files.createTempDirectory("jsonl").toFile
+    try {
+      for (f <- 0 until 7)
+        java.nio.file.Files.write(new java.io.File(dir, s"part-$f.jsonl").toPath,
+          (0 until 1100).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(new java.io.File(dir, "part-7.jsonl").toPath,
+        Seq("""{"k": 1, "extra": {"code": 3}}""", """{"k": 2}""").mkString("\n").getBytes("UTF-8"))
+      val df = JsonLines.read(spark, dir.getAbsolutePath)
+      assert(df.schema.fieldNames.toSet === Set("k", "extra"))
+      assert(df.count() === 7 * 1100 + 2)
+      assert(df.filter($"extra.code" === 3).count() === 1)
+      val inferred = JsonLines.inferSchema(spark, dir.getAbsolutePath).get.asInstanceOf[StructType]
+      assert(inferred.fieldNames.toSet === Set("k", "extra"))
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete()
+    }
+  }
 }
