@@ -121,11 +121,6 @@ object Affinity {
       .filter(col("c") >= minSupport)
       .select(col("p1").as("u"), col("p2").as("v"))
 
-  /** Rewrite accumulated slices as one deduplicated membership table. */
-  def compactBasketItems(
-      spark: org.apache.spark.sql.SparkSession, src: String, dest: String): Unit =
-    spark.read.parquet(src).distinct().write.mode("overwrite").parquet(dest)
-
   // --------------------------------------------------------------------
   // Log-structured basket-items store — the TAKEDOWN face the plain set
   // store above lacks (the r12 verdict's last un-retractable store):

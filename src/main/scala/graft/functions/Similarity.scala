@@ -48,8 +48,6 @@ object Similarity {
     * with one would score 0 and fail any positive threshold). */
   def norm2(a: Column): Column = coalesce(sqrt(dotSeq(a, a)), lit(0.0))
 
-  def cosineSeq(a: Column, b: Column): Column = dotSeq(a, b) / (norm2(a) * norm2(b))
-
   /** Top-k by (score desc, id asc) with map-side partial combine. The buffer
     * never exceeds k entries, so partial aggregates are tiny regardless of
     * corpus size.

@@ -272,17 +272,6 @@ object Multimodal {
       .toDF("id", "features")
   }
 
-  /** [[withFeatures]] with pixel-true luminance-grid features for
-    * decodable images (stub fallback per row otherwise). */
-  def withImageFeatures(df: DataFrame, idCol: String, binCol: String, dim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"), col(binCol).as("data"))
-      .as[MediaRecord]
-      .mapPartitions(_.map(r => (r.id, MediaCodec.extractImageFeatures(r.data, dim))))
-      .toDF("id", "features")
-  }
-
   /** The resize + embed tail of a media-prep pipeline as ONE codec pass:
     * each payload is deserialized exactly once, and both derivatives — the
     * byte-budgeted thumbnail's size and the feature vector — come out of

@@ -1,7 +1,9 @@
 package graft.schema
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeType
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
@@ -27,8 +29,8 @@ import scala.jdk.CollectionConverters._
  * All inferred fields/types are nullable (ExpandJson.java:36, 188).
  * These rules deliberately differ from Spark's own JSON inference
  * (`schema_of_json` would pick LongType / DecimalType / unify array
- * elements), so this is custom driver-side Scala — it runs before plan
- * construction and never on the executor hot path.
+ * elements), so this is custom Scala — it runs before plan construction
+ * (on a bounded sample, see [[infer]]) and never on the executor hot path.
  *
  * (*) Jackson only produces BigDecimal nodes when configured with
  * USE_BIG_DECIMAL_FOR_FLOATS; with the reference's default ObjectMapper a
@@ -152,6 +154,54 @@ object JsonSchemaInference {
       case FirstRow => Some(one(it.next()))
       case Merge    => Some(it.map(one).reduce(mergeTypes))
     }
+  }
+
+  /**
+   * The engine's one inference sampler (ExpandJson, and through it
+   * `inferThenExpand`; JsonLines). In one job it takes the first n
+   * non-null values of each of the first min(n, p) partitions (n = 1,024
+   * under Merge, 1 under FirstRow: the first record wins), infers them and
+   * folds them with [[mergeTypes]] inside the task; the driver folds the
+   * per-partition types in partition order. `mergeTypes` is associative
+   * (field order included), so the result is exactly [[inferFromSample]]
+   * over the per-partition prefixes concatenated in partition order. A
+   * `limit(n)` sample is a prefix of that sequence, so this schema is never
+   * narrower; unlike a `limit`, it sees every partition's first rows even
+   * when partition 0 alone holds n rows — a Kafka topic's partitions are
+   * independent logs.
+   *
+   * When no sampled partition yields a type, the following partitions are
+   * read in order, four times as many per job, as `limit` scales up, so
+   * FirstRow over a frame whose leading partitions are empty still takes
+   * the first non-null value. With `skipMalformed` (the PERMISSIVE
+   * callers) a value that does not parse is left out of the sample — it
+   * becomes a null row when the parse runs; otherwise it fails the job.
+   */
+  def infer(values: RDD[String], mode: Mode = Merge, unifyArrayElements: Boolean = false,
+      skipMalformed: Boolean = false): Option[DataType] = {
+    val n = if (mode == FirstRow) 1 else 1024
+    val fold = (it: Iterator[String]) =>
+      it.filter(_ != null).take(n).flatMap { json =>
+        try Some(inferDataType(parse(json), unifyArrayElements))
+        catch {
+          // An empty line parses to a MissingNode, which inferDataType rejects.
+          case _: JsonProcessingException | _: IllegalArgumentException if skipMalformed => None
+        }
+      }.reduceOption(mergeTypes)
+    val p = values.getNumPartitions
+    var from = 0
+    var width = math.min(n, p)
+    while (from < p) {
+      val until = math.min(from + width, p)
+      val types = values.sparkContext.runJob(values, fold, from until until).flatten
+      if (types.nonEmpty) return Some(mode match {
+        case FirstRow => types.head
+        case Merge    => types.reduce(mergeTypes)
+      })
+      from = until
+      width *= 4
+    }
+    None
   }
 
   // ---------------------------------------------------------------------

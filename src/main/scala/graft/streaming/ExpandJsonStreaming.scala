@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.schema.JsonSchemaInference
 import graft.transform.ExpandJson
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -121,14 +120,12 @@ object ExpandJsonStreaming {
 
   /** Convenience: infer once from a static sample frame (e.g. a parquet
     * replay of the topic), then run the stream with that fixed schema —
-    * the recommended production recipe at scale (zero per-batch cost). */
-  def inferThenExpand(staticSample: DataFrame, stream: DataFrame, column: String): DataFrame = {
-    val sample = staticSample
-      .select(org.apache.spark.sql.functions.col(column).cast("string"))
-      .na.drop().limit(1024)
-      .collect().map(_.getString(0)).toSeq
-    val dt = JsonSchemaInference.inferFromSample(sample).getOrElse(
-      throw new IllegalArgumentException(s"No non-null sample rows for '$column'"))
-    expandWhole(stream, column, dt)
-  }
+    * the recommended production recipe at scale (zero per-batch cost).
+    * The schema is the one `ExpandJson.whole(column)` infers on the static
+    * frame: `Merge` over the first 1,024 values of each of its first 1,024
+    * partitions, faithful arrays
+    * ([[graft.schema.JsonSchemaInference.infer]]). */
+  def inferThenExpand(staticSample: DataFrame, stream: DataFrame, column: String): DataFrame =
+    expandWhole(stream, column,
+      ExpandJson.whole(column)(staticSample).select(col(column)).schema.head.dataType)
 }

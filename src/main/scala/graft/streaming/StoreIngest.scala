@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  * the state store, and the batch reader sees every slice ingested so far.
  *
  * Two algebras, ONE replay posture — idempotent either way:
- *  - SET stores (pHash signatures, gram inventory): the stored unit is a
+ *  - SET stores (gram inventory, MinHash index): the stored unit is a
  *    set row merged by distinct-on-read — replayed batches
  *    (at-least-once delivery, checkpoint recovery) are IDEMPOTENT.
  *  - ADDITIVE stores (LM counts, NB counts, BM25 postings, emb stats):
@@ -33,13 +33,6 @@ object StoreIngest {
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       if (!batch.isEmpty) append(batch)
     }
-
-  /** Perceptual-signature ingestion (SET algebra; the codec runs once per
-    * blob ever — see [[graft.multimodal.Multimodal.writePhashIndex]]). */
-  def phashSignatures(
-      stream: DataFrame, idCol: String, binCol: String, path: String): DataStreamWriter[Row] =
-    ingest(stream)(b =>
-      graft.multimodal.Multimodal.appendPhashIndex(b, idCol, binCol, path))
 
   /** Cross-source gram-inventory ingestion (SET algebra; feeds
     * [[graft.functions.Dedup.overlapMatrixFromInventory]]). */
@@ -63,13 +56,6 @@ object StoreIngest {
       stream: DataFrame, idCol: String, textCol: String, path: String): DataStreamWriter[Row] =
     ingestTagged(stream)((b, id) =>
       graft.functions.LangModel.appendLmCounts(b, idCol, textCol, path, id))
-
-  /** Trigram-layer LM ingestion (ADDITIVE algebra, batch-id ledger on
-    * both layers; feeds [[graft.functions.LangModel.readLm3]]). */
-  def lm3Counts(
-      stream: DataFrame, idCol: String, textCol: String, path: String): DataStreamWriter[Row] =
-    ingestTagged(stream)((b, id) =>
-      graft.functions.LangModel.appendLm3Counts(b, idCol, textCol, path, id))
 
   /** Naive-Bayes count ingestion (ADDITIVE algebra, batch-id ledger; feeds
     * [[graft.functions.NaiveBayes.readNb]] / the NbStream scoring face). */
@@ -105,12 +91,6 @@ object StoreIngest {
     ingestTagged(stream)((b, id) =>
       graft.functions.LangModel.appendLmCountsNegated(
         b, idCol, textCol, path, id | TakedownIdBit))
-
-  def nbTakedowns(
-      stream: DataFrame, labelCol: String, textCol: String, path: String): DataStreamWriter[Row] =
-    ingestTagged(stream)((b, id) =>
-      graft.functions.NaiveBayes.appendNbCountsNegated(
-        b, labelCol, textCol, path, id | TakedownIdBit))
 
   def bm25Takedowns(
       stream: DataFrame, idCol: String, textCol: String, path: String,

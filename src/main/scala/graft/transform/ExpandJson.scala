@@ -2,7 +2,7 @@ package graft.transform
 
 import graft.schema.JsonSchemaInference
 import graft.schema.JsonSchemaInference.{Merge, Mode, NamingState}
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -41,29 +41,36 @@ import org.apache.spark.sql.types._
  * already the reference's de-facto semantics — its 16-entry schema cache
  * makes the first record's inferred schema stick (ExpandJson.java:132-134).
  * Here the schema comes from (in priority order): a user override (the
- * production path at 100 TB — zero inference cost), or a driver-side
- * inference pass over a bounded sample (`sampleSize` rows; `FirstRow` mode
- * replicates first-record-wins exactly).
+ * production path at 100 TB — zero inference cost), or a plan-time
+ * inference pass over a bounded sample (`FirstRow` mode replicates
+ * first-record-wins exactly; `Merge` widens across the sample).
  *
- * Scale notes: the inference sample is a `limit(n)` collect — on parquet it
- * touches only the first file splits, never a full scan. The parse itself is
- * a single `Project` of built-in `from_json` (Catalyst `JsonToStructs`):
- * narrow, whole-stage-codegen'd, no shuffle, and Catalyst's
- * `OptimizeJsonExprs` prunes unused struct subfields from the parse.
+ * Scale notes: the inference sample is one job over the first rows of
+ * every partition ([[JsonSchemaInference.infer]]: the first 1,024 non-null
+ * values of each of the first 1,024 partitions under `Merge`, the first
+ * value under `FirstRow`), never a full scan, so a field that only a later
+ * Kafka partition or file split carries is still seen. The limit that
+ * remains: a value behind 1,024 others in its split is unseen (a small
+ * file that Spark packs behind a large one into one split, say).
+ * Exhaustive inference is out of scope; pass `schemaOverrides` instead.
+ * The parse itself is a single `Project` of built-in `from_json` (Catalyst
+ * `JsonToStructs`): narrow, whole-stage-codegen'd, no shuffle, and
+ * Catalyst's `OptimizeJsonExprs` prunes unused struct subfields from the
+ * parse.
  *
  * Error model (reference §2.3): conflicting mode/fields config throws at
  * build time; malformed JSON throws at execution (FAILFAST, matching the
- * reference's DataException at ExpandJson.java:169-170) unless
- * `permissive = true` (null row instead). One deliberate divergence: a null
- * target value is passed through as null rather than NPE-ing
- * (ExpandJson.java:168).
+ * reference's DataException at ExpandJson.java:169-170), or at build time
+ * when the inference sample holds it, unless `permissive = true` (null row
+ * instead; a malformed sampled value is left out of the inference). One
+ * deliberate divergence: a null target value is passed through as null
+ * rather than NPE-ing (ExpandJson.java:168).
  */
 final case class ExpandJson(
     fields: Seq[String] = Nil,
     wholeColumn: Option[String] = None,
     schemaNamePrefix: Option[String] = None,
     inferenceMode: Mode = Merge,
-    sampleSize: Int = 1024,
     permissive: Boolean = false,
     schemaOverrides: Map[String, DataType] = Map.empty,
     variantMode: Boolean = false,
@@ -74,7 +81,6 @@ final case class ExpandJson(
     unifyArrayElements: Boolean = false
 ) extends (DataFrame => DataFrame) {
 
-  require(sampleSize > 0, "sampleSize must be positive")
   require(!variantMode || fields.isEmpty,
     "variantMode is a whole-value mode (the reference's per-record schemaless path)")
 
@@ -276,21 +282,20 @@ final case class ExpandJson(
     df.select(outCols: _*)
   }
 
-  /** Driver-side inference pass over a bounded sample of the column. */
+  /** Plan-time inference over the first rows of the column's partitions
+    * ([[JsonSchemaInference.infer]]). */
   private def inferColumn(df: DataFrame, source: Column, name: String): DataType = {
     if (df.isStreaming)
       throw new IllegalArgumentException(
         s"Cannot infer a schema for column '$name' on a streaming DataFrame; " +
           "pass schemaOverrides, or infer per-microbatch via ExpandJsonStreaming.")
-    val n = if (inferenceMode == JsonSchemaInference.FirstRow) 1 else sampleSize
     // Two projections: `source` may be a generator (explode over an
     // array-crossing path), which must sit at the top level of its own
     // select — the cast rides a second one.
-    val sample = df.select(source.as("__leaf"))
-      .select(col("__leaf").cast(StringType)).na.drop().limit(n)
-      .collect().map(_.getString(0))
-    JsonSchemaInference.inferFromSample(sample.toSeq, inferenceMode,
-      unifyArrayElements).getOrElse(
+    val values = df.select(source.as("__leaf"))
+      .select(col("__leaf").cast(StringType)).as(Encoders.STRING).rdd
+    JsonSchemaInference.infer(values, inferenceMode, unifyArrayElements,
+      skipMalformed = permissive).getOrElse(
       throw new IllegalArgumentException(
         s"Cannot infer a schema for column '$name': no non-null rows in sample"))
   }
@@ -324,21 +329,18 @@ object ExpandJson {
   def whole(column: String,
             schemaNamePrefix: Option[String] = None,
             inferenceMode: Mode = Merge,
-            sampleSize: Int = 1024,
             permissive: Boolean = false,
             schemaOverride: Option[DataType] = None): ExpandJson =
-    ExpandJson(Nil, Some(column), schemaNamePrefix, inferenceMode, sampleSize, permissive,
+    ExpandJson(Nil, Some(column), schemaNamePrefix, inferenceMode, permissive,
       schemaOverride.map(column -> _).toMap)
 
   /** Per-field expansion of root-level columns (the with-schema path). */
   def onFields(fields: Seq[String],
                schemaNamePrefix: Option[String] = None,
                inferenceMode: Mode = Merge,
-               sampleSize: Int = 1024,
                permissive: Boolean = false,
                schemaOverrides: Map[String, DataType] = Map.empty): ExpandJson =
-    ExpandJson(fields, None, schemaNamePrefix, inferenceMode, sampleSize, permissive,
-      schemaOverrides)
+    ExpandJson(fields, None, schemaNamePrefix, inferenceMode, permissive, schemaOverrides)
 
   /** Whole-value expansion into a per-record `VariantType` — the reference's
     * cache-free per-record inference (ExpandJson.java:100-101) made exact:

@@ -4,7 +4,9 @@ import graft.schema.JsonSchemaInference
 import graft.transform.ExpandJson
 import org.apache.spark.SparkException
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{struct, to_json}
 import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, rng}
 
 /** DataFrame-level port of the reference's 10 unit tests
   * (ExpandJsonTest.java) plus the coverage gaps listed in SURVEY.md §5. */
@@ -317,11 +319,13 @@ class ExpandJsonSpec extends SparkSpec {
     val df = Seq(SIMPLE_JSON, """{"broken": """).toDF("value")
     intercept[SparkException] {
       // Sample sees valid row first so inference succeeds; parse then fails.
-      df.transform(ExpandJson.whole("value", sampleSize = 1)).collect()
+      df.transform(
+        ExpandJson.whole("value", inferenceMode = JsonSchemaInference.FirstRow)).collect()
     }
     // PERMISSIVE from_json yields a struct of all-null fields (not a null
     // struct) for a corrupt record.
-    val ok = df.transform(ExpandJson.whole("value", sampleSize = 1, permissive = true))
+    val ok = df.transform(ExpandJson.whole("value",
+      inferenceMode = JsonSchemaInference.FirstRow, permissive = true))
     val corrupt = ok.collect().count { r =>
       r.isNullAt(0) || { val s = r.getStruct(0); (0 until s.length).forall(s.isNullAt) }
     }
@@ -418,9 +422,11 @@ class ExpandJsonSpec extends SparkSpec {
     // lenient mode degrades by record.
     val df = Seq("""{"h": [1, 2]}""", """{"h": [1, "a"]}""").toDF("value")
     intercept[SparkException] {
-      df.transform(ExpandJson.whole("value", sampleSize = 1)).collect()
+      df.transform(
+        ExpandJson.whole("value", inferenceMode = JsonSchemaInference.FirstRow)).collect()
     }
-    val ok = df.transform(ExpandJson.whole("value", sampleSize = 1, permissive = true))
+    val ok = df.transform(ExpandJson.whole("value",
+      inferenceMode = JsonSchemaInference.FirstRow, permissive = true))
       .collect().map(r => if (r.isNullAt(0)) null else r.getStruct(0).getSeq[Any](0))
     assert(ok(0) === Seq(1, 2))
     // The unconvertible record's expanded value is null; the clean record
@@ -435,7 +441,7 @@ class ExpandJsonSpec extends SparkSpec {
     // DataException parity, previous test) is untouched.
     val df = Seq("""{"h": [1, "a"], "m": [1, 2.5], "w": [1, 2]}""").toDF("value")
     val out = df.transform(
-      ExpandJson.whole("value", sampleSize = 1).copy(unifyArrayElements = true))
+      ExpandJson.whole("value").copy(unifyArrayElements = true))
     val st = out.schema("value").dataType.asInstanceOf[StructType]
     assert(st("h").dataType === ArrayType(StringType, true))
     assert(st("m").dataType === ArrayType(DoubleType, true))
@@ -449,11 +455,100 @@ class ExpandJsonSpec extends SparkSpec {
     // Faithful default on the SAME frame still types h by its first
     // element and throws in FAILFAST (reference parity).
     intercept[SparkException] {
-      df.transform(ExpandJson.whole("value", sampleSize = 1)).collect()
+      df.transform(ExpandJson.whole("value")).collect()
     }
     // fromConfig surface: the extension property opts in; absent -> faithful.
     val viaCfg = ExpandJson.fromConfig(Map("unify.array.elements" -> "true"))
     assert(viaCfg.unifyArrayElements)
     assert(!ExpandJson.fromConfig(Map.empty[String, String]).unifyArrayElements)
+  }
+
+  // ---------------------------------------------------------------------
+  // The inference sample: the first rows of every partition
+  // ---------------------------------------------------------------------
+
+  /** 4 × 1,100 rows in four partitions, `extra` only in the first row of
+    * partition 3: a `limit(1024)` sample reads partition 0 alone. */
+  private def laterPartitionFrame =
+    spark.sparkContext.parallelize((0 until 4400).map { i =>
+      if (i == 3300) """{"k": 3300, "extra": {"code": 3}}""" else s"""{"k": $i}"""
+    }, 4).toDF("value")
+
+  test("inference samples every partition: a field only in partition 3 is kept") {
+    val df = laterPartitionFrame
+    for (out <- Seq(df.transform(ExpandJson.whole("value")),
+        df.transform(ExpandJson.onFields(Seq("value"))))) {
+      assert(out.schema("value").dataType === StructType(Seq(
+        StructField("k", IntegerType),
+        StructField("extra", StructType(Seq(StructField("code", IntegerType)))))))
+      assert(out.filter($"value.extra.code" === 3).select($"value.k").as[Int].collect().toSeq
+        === Seq(3300))
+      assert(out.count() === 4400)
+    }
+  }
+
+  test("permissive: a malformed value in a later partition's sample is left out of inference") {
+    // Ten valid rows fill partition 0; partition 1 starts with the
+    // malformed row, which the sample reads.
+    val lines = (0 until 10).map(i => s"""{"k": $i}""") ++ Seq("""{"broken": """) ++
+      (10 until 19).map(i => s"""{"k": $i}""")
+    val df = spark.sparkContext.parallelize(lines, 2).toDF("value")
+    val out = df.transform(ExpandJson.whole("value", permissive = true))
+    assert(out.schema("value").dataType === StructType(Seq(StructField("k", IntegerType))))
+    val corrupt = out.collect().count { r =>
+      r.isNullAt(0) || { val s = r.getStruct(0); (0 until s.length).forall(s.isNullAt) }
+    }
+    assert(corrupt === 1)
+    // FAILFAST: the sampled malformed value fails the build.
+    intercept[SparkException](df.transform(ExpandJson.whole("value")))
+  }
+
+  test("inference reads on past empty leading partitions (FirstRow and Merge)") {
+    val df = spark.range(0, 8, 1, 4).where($"id" >= 2).select(to_json(struct($"id")).as("value"))
+    for (mode <- Seq(JsonSchemaInference.FirstRow, JsonSchemaInference.Merge)) {
+      val out = df.transform(ExpandJson.whole("value", inferenceMode = mode))
+      assert(out.schema("value").dataType === StructType(Seq(StructField("id", IntegerType))))
+      assert(out.select($"value.id").as[Int].collect().sorted.toSeq === (2 until 8))
+    }
+  }
+
+  /** Documents over four common keys plus rare generated ones, so later
+    * rows keep adding fields and widening types. */
+  private val docGen: Gen[String] = {
+    val key = Gen.frequency(60 -> Gen.oneOf("a", "b", "c", "d"), 1 -> Gen.identifier.map(_.take(6)))
+    val scalar = Gen.oneOf(
+      Gen.chooseNum(-1000, 1000).map(_.toString),
+      Gen.chooseNum(3000000000L, 4000000000L).map(_.toString),
+      Gen.chooseNum(-1e3, 1e3).map(d => f"$d%.3f"),
+      Gen.alphaStr.map(s => "\"" + s.take(5) + "\""),
+      Gen.oneOf("true", "null"))
+    def obj(depth: Int): Gen[String] = for {
+      n <- Gen.chooseNum(1, 3)
+      keys <- Gen.listOfN(n, key).map(_.distinct)
+      vals <- Gen.listOfN(keys.size,
+        if (depth == 0) scalar
+        else Gen.frequency(4 -> scalar, 1 -> obj(depth - 1),
+          1 -> Gen.listOfN(2, scalar).map(_.mkString("[", ", ", "]"))))
+    } yield keys.zip(vals).map { case (k, v) => "\"" + k + "\": " + v }.mkString("{", ", ", "}")
+    obj(2)
+  }
+
+  test("property: the schema is inferFromSample over the per-partition prefixes, and contains the limit sample's") {
+    val docs = Iterator.from(0)
+      .map(i => docGen(Gen.Parameters.default, rng.Seed(7L + i)))
+      .flatten.take(4500).toSeq
+    for (p <- Seq(1, 3, 8)) {
+      val rdd = spark.sparkContext.parallelize(docs, p)
+      val df = rdd.toDF("value")
+      val got = df.transform(ExpandJson.whole("value")).schema("value").dataType
+      val prefixes = rdd.glom().collect().take(1024).flatMap(_.take(1024)).toSeq
+      assert(got === JsonSchemaInference.inferFromSample(prefixes).get, s"p = $p")
+      // A limit(1024) sample's schema, merged into ours, changes nothing:
+      // its fields come first in the same order and no type narrows.
+      val limited = JsonSchemaInference.inferFromSample(
+        df.limit(1024).collect().map(_.getString(0)).toSeq).get
+      assert(JsonSchemaInference.mergeTypes(limited, got) === got, s"p = $p")
+      if (p > 1) assert(got !== limited, s"p = $p: later partitions added nothing")
+    }
   }
 }

@@ -1208,6 +1208,25 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(rows.toSeq === Seq(42))
   }
 
+  test("inferThenExpand samples every partition of the static frame: a field only in partition 3 is kept") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    // 4 × 1,100 rows; `extra` only in the first row of partition 3, which
+    // a limit(1024) sample never reaches.
+    val staticSample = spark.sparkContext.parallelize((0 until 4400).map { i =>
+      if (i == 3300) """{"k": 3300, "extra": {"code": 3}}""" else s"""{"k": $i}"""
+    }, 4).toDF("value")
+    val in = MemoryStream[String]
+    val out = ExpandJsonStreaming.inferThenExpand(staticSample, in.toDF().toDF("value"), "value")
+    assert(out.schema("value").dataType.catalogString === "struct<k:int,extra:struct<code:int>>")
+    val q = out.writeStream.format("memory").queryName("expand_infer_spread")
+      .outputMode("append").start()
+    runToCompletion(q, () => in.addData("""{"k": 1, "extra": {"code": 3}}""", """{"k": 2}"""))
+    val rows = spark.table("expand_infer_spread")
+      .select($"value.k", $"value.extra.code").as[(Int, Option[Int])].collect().sortBy(_._1)
+    assert(rows.toSeq === Seq((1, Some(3)), (2, None)))
+  }
+
   test("Cdc.compactLog runs unchanged on a stream (complete mode), parity with batch") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
