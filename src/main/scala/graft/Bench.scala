@@ -24,7 +24,7 @@ object Bench {
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt)
     val only = args.toSet
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
-    val spark = SparkSession.builder()
+    val spark = GraftSession.getOrCreate(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
@@ -32,8 +32,7 @@ object Bench {
       // multi-second CPU-bound tail cannot be squeezed by whatever cache
       // residue the previous query left, which was one driver of the
       // ±13% across-run swings the r12 verdict flagged.
-      .config("spark.memory.storageFraction", "0.3")
-      .getOrCreate()
+      .config("spark.memory.storageFraction", "0.3"))
     spark.sparkContext.setLogLevel("WARN")
 
     def median(xs: Seq[Double]): Double = {

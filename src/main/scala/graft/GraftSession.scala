@@ -19,6 +19,17 @@ import org.apache.spark.sql.SparkSession
  *    `events` table) are unreadable without the legacy conf.
  *  - '''`graft_*` SQL functions''' registered so `spark.sql("...")` users
  *    get the codegen'd kernels too.
+ *  - '''A fork-free `file://` FileSystem''': without libhadoop, Hadoop's
+ *    local FileSystem forks `chmod` for every file or directory it creates
+ *    with a permission and `readlink` for every `FileContext` rename: about
+ *    36 processes per streaming micro-batch (its offset, commit, source and
+ *    sink logs), one after another on the stream's thread.
+ *    [[graft.io.NioLocalFileSystem]] and [[graft.io.NioLocalFs]] do both in
+ *    process, with the same results and `.crc` checksums; other schemes
+ *    are untouched. Spark copies `spark.hadoop.*` into the Hadoop conf only
+ *    when it creates the `SparkContext`, and Hadoop caches the `file`
+ *    FileSystem once per JVM, so a session created before `GraftSession`
+ *    configures one keeps Hadoop's own class.
  *
  * Deliberately NOT set: `spark.sql.shuffle.partitions` — single-machine
  * harnesses (`Bench`, `Verify`, tests) pin it to their core count, but on
@@ -34,6 +45,8 @@ object GraftSession {
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 
   /** Build (or get) the session and register the `graft_*` SQL surface. */
   def getOrCreate(b: SparkSession.Builder = SparkSession.builder()): SparkSession = {

@@ -26,12 +26,11 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val exec = sys.env.getOrElse("SPARK_GRAFT_EXEC", "0") == "1"
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.getOrCreate(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.memory.storageFraction", "0.3")
-      .getOrCreate()
+      .config("spark.memory.storageFraction", "0.3"))
     spark.sparkContext.setLogLevel("WARN")
     val only = args.drop(2).toSet
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

@@ -26,11 +26,10 @@ import org.apache.spark.sql.functions._
  */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.getOrCreate(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false"))
     spark.sparkContext.setLogLevel("WARN")
     // Small parquet row groups for the probe layouts (production default
     // 128 MB): the gate-SF corpus must land MULTIPLE row groups per cell

@@ -21,7 +21,7 @@ object StageProbe {
     val b1 = extra.split(",").filter(_.contains("=")).foldLeft(b0) { (b, kv) =>
       val Array(k, v) = kv.split("=", 2); b.config(k, v)
     }
-    val spark = b1.getOrCreate()
+    val spark = graft.GraftSession.getOrCreate(b1)
     spark.sparkContext.setLogLevel("WARN")
 
     final case class St(var name: String = "", var submitted: Long = 0,

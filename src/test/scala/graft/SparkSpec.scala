@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session), built
+  * through `GraftSession.configure` so every suite runs on the production
+  * conf posture, its `file://` FileSystem included. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.configure(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
